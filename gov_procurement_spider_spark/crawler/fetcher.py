@@ -3,13 +3,15 @@ per-URL headless-Chrome lifecycle (jiangsu.py:218-232, driver_setup.py:36-40:
 spawn + handshake + quit *per row*).
 
 One `mapInArrow` pass per epoch fetches every selected frontier row inside
-its partition: list pages yield discovered-link rows (next pagination page +
-detail links, ref main.py:89-100), detail pages yield the image+caption
-payload (BASELINE.json input_hint schema), and each batch appends one
-``metric`` lineage row (per-partition fetch counts/bytes/wall — SURVEY §2.10
-T6). In this sandbox the "network" is the deterministic synthetic site
-(sources/site_model.py); on a real cluster this function body is the only
-thing that changes (batched HTTP with connection reuse per partition).
+its partition (an epoch small enough for one task calls the same function
+in the driver process — plans/crawl.py): list pages yield discovered-link
+rows (next pagination page + detail links, ref main.py:89-100), detail
+pages yield the image+caption payload (BASELINE.json input_hint schema),
+and each batch appends one ``metric`` lineage row (per-partition fetch
+counts/bytes/wall — SURVEY §2.10 T6). In this sandbox the "network" is the
+deterministic synthetic site (sources/site_model.py); on a real cluster
+this function body is the only thing that changes (batched HTTP with
+connection reuse per partition).
 
 Round 6: the boundary is Arrow-native end to end (was mapInPandas).
 Payload bytes previously crossed worker→JVM through a pandas frame — one

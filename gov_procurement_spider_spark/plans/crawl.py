@@ -6,7 +6,7 @@ in-flight request, fresh Chrome per URL, no persistence) with per-epoch
 DataFrame dataflow:
 
   frontier ─ join politeness budgets ─ top-k per host (O2) ─► selected
-  selected ─ mapInPandas fetch (S3, Arrow-vectorized) ─► payloads + links
+  selected ─ mapInArrow fetch (S3; one-task epochs in the driver) ─► payloads + links
   links ─ route filter (P5) ─ robots anti-filter (T3) ─ keep-first window
         ─ seen-filter prefilter + exact anti-join vs seen (D1) ─► admitted
   commit: frontier' / politeness' / seen+ / fetched+ / crawl_log+ / metrics+
@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from ..crawler.bloom import BloomFilter
 from ..crawler.cuckoo import CuckooFilter
-from ..crawler.fetcher import FETCH_OUT_SCHEMA, make_fetcher
+from ..crawler.fetcher import FETCH_OUT_SCHEMA, PA_SCHEMA, make_fetcher
 from ..functions.urls import url_hash64, url_path
 from ..operators.skew import with_salt
 from ..sources import site_model as sm
@@ -80,19 +80,27 @@ class CrawlResult:
     epochs: int
     spark: SparkSession
 
-    def _union(self, name: str) -> DataFrame:
-        # per-path reads unioned (not a multi-root read: the row_type
-        # partitioning inside fetch_out confuses cross-root discovery)
-        paths = [
-            ck.table_path(self.ckpt, e, name)
-            for e in ck.committed_epochs(self.ckpt)
-            if os.path.isdir(ck.table_path(self.ckpt, e, name))
-        ]
-        dfs = [self.spark.read.parquet(p) for p in paths]
+    def _union(self, dfs: list, schema: str) -> DataFrame:
+        """unionByName over per-epoch reads; an empty frame of ``schema``
+        when there are none (no epoch has fetched yet)."""
+        if not dfs:
+            return self.spark.createDataFrame([], schema)
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d, allowMissingColumns=True)
         return out
+
+    def _fetch_out(self) -> DataFrame:
+        # per-path reads unioned (not a multi-root read: the row_type
+        # partitioning inside fetch_out confuses cross-root discovery)
+        paths = [
+            ck.table_path(self.ckpt, e, "fetch_out")
+            for e in ck.committed_epochs(self.ckpt)
+            if os.path.isdir(ck.table_path(self.ckpt, e, "fetch_out"))
+        ]
+        return self._union(
+            [self.spark.read.parquet(p) for p in paths], FETCH_OUT_SCHEMA
+        )
 
     def crawl_order(self) -> DataFrame:
         """Total crawl order: (epoch, host, key...) ascending — the proof
@@ -113,16 +121,14 @@ class CrawlResult:
                     .select(*FRONTIER_COLS)
                     .withColumn("epoch", F.lit(pe))
                 )
-        out = parts[0]
-        for d in parts[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
+        out = self._union(parts, _FRONTIER_SCHEMA + ", epoch int")
         return out.orderBy(["epoch", "host"] + SELECT_ORDER)
 
     def fetched(self) -> DataFrame:
         """Payload rows (input_hint schema + provenance), partition-pruned
         out of fetch_out — payload bytes are written exactly once."""
         return (
-            self._union("fetch_out")
+            self._fetch_out()
             .filter(F.col("row_type") == "payload")
             .select(
                 "image_id", "bytes", "w", "h", "fmt", "caption", "phash",
@@ -134,7 +140,7 @@ class CrawlResult:
     def failed(self) -> DataFrame:
         """Failed fetches (consumed budget, no payload; ref main.py:124-127)."""
         return (
-            self._union("fetch_out")
+            self._fetch_out()
             .filter(F.col("row_type") == "failed")
             .select("url", "host", "fetch_epoch", *ORDER_KEY)
         )
@@ -148,7 +154,7 @@ class CrawlResult:
     def metrics(self) -> DataFrame:
         """Per-partition fetch lineage rows emitted by the fetch UDF (T6)."""
         return (
-            self._union("fetch_out")
+            self._fetch_out()
             .filter(F.col("row_type") == "metric")
             .select(
                 "fetch_epoch", "urls_fetched", "links_discovered",
@@ -340,13 +346,52 @@ def init_state(
     ck.commit_epoch(ckpt, 0, {"n_seeds": frontier.count(), "kind": "init"})
 
 
-# Fetch-task sizing floor: at ~2 ms of codec work per URL and ~10 ms of
-# fixed per-task cost (schedule + Arrow round-trip + commit), a task below
-# ~32 URLs spends more on overhead than fetching — the round-6 A/B read the
-# small-site crawl at 10.3 s with floor 4 vs 7.3 s with floor 32 (fetch
-# phase 4.8 → 2.3 s). The 2×-slots cap above still binds at scale, so the
+# URLs a Python fetch task must carry to pay for its own start-up. Every
+# Python task on this stack costs a fixed ~0.2 s before its first row, most
+# of it CPU in one call: pyspark 4.1's worker runs
+# importlib.invalidate_caches() per task, and on CPython 3.11 that re-reads
+# the pyspark.zip directory (~1,300 entries) once per cached zipimporter
+# (BENCH/BASELINE.md, "Python-task start-up"). The fetch itself costs
+# ~185-225 µs of codec CPU per URL, so a task pays for its start-up at
+# ~0.2 s / ~200 µs ≈ 1,000 URLs. An epoch below that is one task — run in
+# the driver process when run_epoch may — and bigger epochs get one task
+# per ~1,000 URLs up to the 2×-slots cap, which binds at scale, so the
 # big-epoch plan is unchanged.
-_MIN_URLS_PER_FETCH_TASK = 32
+_MIN_URLS_PER_FETCH_TASK = 1000
+
+
+def _fetch_in_driver(
+    spec: SiteSpec, ckpt: str, epoch: int, out_epoch: int, n_selected: int
+) -> int:
+    """The one-task fetch, run in the driver process: the same
+    ``make_fetcher(spec, epoch)`` (ingest validation on) over the whole
+    frontier — the selected set of an unconstrained epoch — read with a
+    bounded pyarrow read, written in the layout the Spark fetch job's
+    ``partitionBy("row_type")`` writes: ``fetch_out/row_type=<t>/``, the
+    row type in the path only, here one deterministic file per row type,
+    with the job's parquet options (no compression, no dictionary).
+    Returns the number of link rows written."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rows = pa.RecordBatch.from_pydict(
+        ck.read_columns_local(ckpt, epoch, "frontier", FRONTIER_COLS, n_selected)
+    )
+    out = pa.Table.from_batches(
+        make_fetcher(spec, epoch)(iter([rows])), schema=PA_SCHEMA
+    )
+    n_links = 0
+    for row_type in sorted(set(out["row_type"].to_pylist())):
+        part = out.filter(pc.equal(out["row_type"], row_type))
+        if row_type == "link":
+            n_links = part.num_rows
+        ck.write_table_local(
+            ckpt, out_epoch, f"fetch_out/row_type={row_type}",
+            part.drop_columns(["row_type"]),
+            compression="none", use_dictionary=False,
+        )
+    return n_links
+
 
 _HOST_COUNTS_SCHEMA = "host string, n_pending bigint"
 
@@ -1098,36 +1143,47 @@ def run_epoch(
     # the heavy payload files away; parquet compression off because image
     # payloads are already entropy-dense)
     fetch_out_path = ck.table_path(ckpt, out_epoch, "fetch_out")
-    # fetch tasks must be sized by fetch *cost*, not by input bytes: the
+    # fetch tasks are sized by fetch *cost*, not by input bytes: the
     # frontier rows are ~100 B each, so a byte-based scan split would run a
-    # million-URL fetch on two cores. Round-robin to 2× task slots — but no
-    # more tasks than ~n_selected/4: a 96-URL drain epoch on 64 tasks paid
-    # more scheduling than fetching (r4 phase profile). At scale the 2×-slot
-    # cap always binds, so the big-epoch plan is unchanged.
+    # million-URL fetch on two cores. Round-robin to 2× task slots, but
+    # give no task fewer than _MIN_URLS_PER_FETCH_TASK URLs.
     fetch_par = min(
         spark.sparkContext.defaultParallelism * 2,
         max(1, -(-n_selected // _MIN_URLS_PER_FETCH_TASK)),
     )
-    # discovered-link count rides back on an accumulator instead of a probe
-    # job over the metric rows (see make_fetcher: retries can only inflate
-    # it, and the epoch only branches on == 0, so inflation is benign)
-    links_acc = spark.sparkContext.accumulator(0)
-    (
-        selected.repartition(fetch_par)
-        .mapInArrow(
-            make_fetcher(spec, epoch, links_acc=links_acc), schema=FETCH_OUT_SCHEMA
+    if stats_local and constrained == 0 and fetch_par == 1:
+        # a one-task epoch over a small frontier: the driver process runs
+        # the task itself and saves the Python task start-up and the job
+        # (~0.2-0.3 s, more than the fetch work it would carry); the link
+        # count is exact, so no accumulator
+        fetch_tasks = 0
+        n_links = _fetch_in_driver(spec, ckpt, epoch, out_epoch, n_selected)
+    else:
+        fetch_tasks = fetch_par
+        # discovered-link count rides back on an accumulator instead of a
+        # probe job over the metric rows (see make_fetcher: retries can only
+        # inflate it, and the epoch only branches on == 0, so inflation is
+        # benign)
+        links_acc = spark.sparkContext.accumulator(0)
+        (
+            selected.repartition(fetch_par)
+            .mapInArrow(
+                make_fetcher(spec, epoch, links_acc=links_acc),
+                schema=FETCH_OUT_SCHEMA,
+            )
+            .write.mode("overwrite")
+            .partitionBy("row_type")
+            .option("compression", "none")
+            # payload bytes are entropy-dense and unique (real crawls:
+            # already-compressed images) — parquet's dictionary attempt
+            # buffers and hashes every ~9 KB value before falling back to
+            # plain encoding on every page; disabling it read the
+            # steady-state epoch at 2.9-3.2 → 2.5 s fetch (CPU 53-57 → 49,
+            # same-window A/B r6)
+            .option("parquet.enable.dictionary", "false")
+            .parquet(fetch_out_path)
         )
-        .write.mode("overwrite")
-        .partitionBy("row_type")
-        .option("compression", "none")
-        # payload bytes are entropy-dense and unique (real crawls: already-
-        # compressed images) — parquet's dictionary attempt buffers and
-        # hashes every ~9 KB value before falling back to plain encoding
-        # on every page; disabling it read the steady-state epoch at
-        # 2.9-3.2 → 2.5 s fetch (CPU 53-57 → 49, same-window A/B r6)
-        .option("parquet.enable.dictionary", "false")
-        .parquet(fetch_out_path)
-    )
+        n_links = links_acc.value
     _mark("fetch")
 
     # crawl_log is the proof artifact; when the fast path selected the WHOLE
@@ -1139,12 +1195,10 @@ def run_epoch(
             selected.withColumn("epoch", F.lit(epoch)), ckpt, out_epoch, "crawl_log"
         )
 
-    # whether anything was discovered (rode back on the fetch job's
-    # accumulator) lets pure-payload epochs (steady state, drain) skip the
-    # entire admission machinery
-    n_links = links_acc.value
     _mark("links_probe")
 
+    # whether anything was discovered lets pure-payload epochs (steady
+    # state, drain) skip the entire admission machinery
     if n_links == 0:
         if stats_local and constrained == 0:
             # pure-payload fast-path epoch (steady state, drain): remaining
@@ -1183,6 +1237,7 @@ def run_epoch(
                 "urls_fetched": n_selected,
                 "urls_admitted": 0,
                 "crawl_log_from_frontier": log_is_frontier,
+                "fetch_tasks": fetch_tasks,
                 "seen_filter_load": filter_load,
                 "phase_ms": phases,
             },
@@ -1247,6 +1302,7 @@ def run_epoch(
                 "urls_fetched": n_selected,
                 "urls_admitted": n_admitted,
                 "crawl_log_from_frontier": log_is_frontier,
+                "fetch_tasks": fetch_tasks,
                 "seen_filter_load": filter_load,
                 "phase_ms": phases,
             },
@@ -1360,6 +1416,7 @@ def run_epoch(
             "urls_fetched": n_selected,
             "urls_admitted": n_admitted,
             "crawl_log_from_frontier": log_is_frontier,
+            "fetch_tasks": fetch_tasks,
             "seen_filter_load": filter_load,
             "phase_ms": phases,
         },

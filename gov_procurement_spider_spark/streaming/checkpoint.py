@@ -96,7 +96,9 @@ def read_columns_local(
     }
 
 
-def write_table_local(ckpt: str, epoch: int, name: str, table) -> None:
+def write_table_local(
+    ckpt: str, epoch: int, name: str, table, **parquet_options
+) -> None:
     """Driver-side write of a SMALL epoch table (a ``pyarrow.Table``) as one
     deterministic parquet file — the write-side counterpart of
     ``read_columns_local`` (round 6). A Spark write job costs ~0.3 s of
@@ -107,12 +109,15 @@ def write_table_local(ckpt: str, epoch: int, name: str, table) -> None:
     ~1 ms. Callers own the bound and the schema — pass explicit types that
     match what the distributed writer produces, or cross-epoch unions
     break. Deterministic: fixed filename, no timestamps in our metadata,
-    same rows → same bytes (resume replay stays byte-identical)."""
+    same rows → same bytes (resume replay stays byte-identical).
+    ``parquet_options`` go to ``pq.write_table``."""
     import pyarrow.parquet as pq
 
     root = table_path(ckpt, epoch, name)
     os.makedirs(root, exist_ok=True)
-    pq.write_table(table, os.path.join(root, "part-00000-driver.parquet"))
+    pq.write_table(
+        table, os.path.join(root, "part-00000-driver.parquet"), **parquet_options
+    )
 
 
 def read_column_local(

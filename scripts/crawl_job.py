@@ -15,7 +15,8 @@ the job lands on a real multi-executor cluster. Two modes:
   the same job in-process across core counts).
 
 Prints ONE JSON line with the run's lineage (urls, epochs, wall, phase_ms
-of the last epoch) on success.
+of the last epoch, and the fetch_tasks of every fetching epoch: 0 = fetched
+in the driver process) on success.
 """
 
 from __future__ import annotations
@@ -127,6 +128,10 @@ def main() -> None:
         last = ck.last_committed(args.ckpt)
     if last:
         out["phase_ms"] = ck.read_manifest(args.ckpt, last).get("phase_ms")
+    manifests = [
+        ck.read_manifest(args.ckpt, e) for e in ck.committed_epochs(args.ckpt)
+    ]
+    out["fetch_tasks"] = [m["fetch_tasks"] for m in manifests if "fetch_tasks" in m]
     print(json.dumps(out))
     spark.stop()
 

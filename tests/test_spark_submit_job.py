@@ -65,6 +65,8 @@ def test_spark_submit_pyfiles_crawl():
         assert res["mode"] == "crawl"
         assert res["urls"] > 0 and res["epochs"] > 0
         assert res["phase_ms"] is None or "fetch" in res["phase_ms"]
+        # open politeness, tiny epochs: every epoch fetched in the driver
+        assert res["fetch_tasks"] == [0] * res["epochs"]
         # resumability under ship mode: rerunning with the same ckpt is a
         # no-op continuation, not a crash
         out2 = subprocess.run(
