@@ -3,14 +3,18 @@ partitioned URL frontier (BASELINE.json north_rule).
 
 Replaces the reference's strictly sequential fetch loop (main.py:69-140, one
 in-flight request, fresh Chrome per URL, no persistence) with per-epoch
-DataFrame dataflow:
+DataFrame dataflow, planned from parquet footers first:
 
+  plan: host_counts + politeness columns ─► n_frontier, constrained, n_selected
+        (small unconstrained one-task epoch ⇒ driver epoch: the same steps
+        below run in the driver process over pyarrow, and no DataFrame is
+        built; otherwise the Spark-side inputs are built)
   frontier ─ join politeness budgets ─ top-k per host (O2) ─► selected
-  selected ─ mapInArrow fetch (S3; one-task epochs in the driver) ─► payloads + links
+  selected ─ mapInArrow fetch (S3) ─► payloads + links
   links ─ route filter (P5) ─ robots anti-filter (T3) ─ keep-first window
         ─ seen-filter prefilter + exact anti-join vs seen (D1) ─► admitted
   commit: frontier' / politeness' / seen+ / fetched+ / crawl_log+ / metrics+
-          / seen-filter, one manifest per epoch (T5)
+          / seen-filter, one manifest per epoch (T5, with its ``path``)
 
 The seen-set prefilter is Bloom by default (append-only crawls) or a cuckoo
 filter (crawler/cuckoo.py) when per-key deletion is needed: expire_seen
@@ -408,16 +412,17 @@ def _read_host_counts(spark: SparkSession, ckpt: str, epoch: int) -> DataFrame |
 
 def _pending_stats_local(
     ckpt: str, epoch: int, default_budget: int
-) -> tuple[int, int, int] | None:
+) -> tuple[tuple[int, int, int], dict, dict] | None:
     """Driver-side (n_frontier, constrained, n_selected) for small host
-    sets — the same three scalars the Spark aggregate below computes, read
+    sets — the same three scalars `_spark_epoch`'s aggregate computes, read
     straight from the carried host_counts + politeness parquet when both
-    fit the bounded-local-read cap. Removes the one Spark job of the plan
-    phase (~0.3-0.5 s fixed latency per epoch, the dominant plan-phase
-    term after the round-5 count carry). Returns None when either table
-    exceeds the cap (10^6+ hosts at full scale) — callers then run the
-    distributed aggregate, whose semantics this mirrors exactly:
-    budget = floor(tokens) per politeness row, default for absent hosts;
+    fit the bounded-local-read cap — plus the two column dicts read, which
+    the driver commit reuses. run_epoch calls this first, from footers and
+    two tiny column reads, and decides its path before any DataFrame
+    exists. Returns None when either table is absent or exceeds the cap
+    (10^6+ hosts at full scale) — callers then run the distributed
+    aggregate, whose semantics this mirrors exactly: budget = floor(tokens)
+    per politeness row, default for absent hosts;
     n_selected = Σ min(n_pending, budget)."""
     for t in ("host_counts", "politeness"):
         path = ck.table_path(ckpt, epoch, t)
@@ -443,7 +448,7 @@ def _pending_stats_local(
     n_frontier = int(pending.sum())
     constrained = int(bool((pending > budgets).any()))
     n_selected = int(np.minimum(pending, budgets).sum())
-    return n_frontier, constrained, n_selected
+    return (n_frontier, constrained, n_selected), hc, pol
 
 
 def _next_host_counts(
@@ -712,16 +717,19 @@ def _admit_links_driver(
 
 def _commit_small_epoch_state(
     ckpt: str,
-    epoch: int,
     out_epoch: int,
     spec: SiteSpec,
     adm_rows: list,
+    hc: dict,
+    pol: dict,
     write_seen_new: bool = True,
 ) -> None:
     """Driver-side materialization of the four next-epoch state tables from
     an already-collected admission batch, on the UNCONSTRAINED fast path
     only (selected == whole frontier ⇒ remaining is empty, per-host taken
-    == pending). Value-identical to the distributed writes it replaces:
+    == pending). ``hc``/``pol`` are the host_counts and politeness columns
+    `_pending_stats_local` read in the plan phase. Value-identical to the
+    distributed writes it replaces:
     same politeness token arithmetic term-for-term (tokens − taken + refill,
     capped at burst, full-outer over active hosts), same next host_counts
     (pending − taken + admitted, zeros dropped ⇒ admitted counts by host),
@@ -730,12 +738,6 @@ def _commit_small_epoch_state(
     by url / host) keeps resume replay byte-identical."""
     import pyarrow as pa
 
-    hc = ck.read_columns_local(
-        ckpt, epoch, "host_counts", ["host", "n_pending"], _DRIVER_ADD_MAX_ROWS
-    )
-    pol = ck.read_columns_local(
-        ckpt, epoch, "politeness", ["host", "tokens"], _DRIVER_ADD_MAX_ROWS
-    )
     taken = {h: int(n) for h, n in zip(hc["host"], hc["n_pending"])}
     tokens = {h: float(t) for h, t in zip(pol["host"], pol["tokens"])}
     refill = float(spec.rate_per_sec * spec.epoch_seconds)
@@ -949,32 +951,41 @@ def _advance_politeness(
     ).drop("n_taken", "_active")
 
 
-def run_epoch(
-    spark: SparkSession, spec: SiteSpec, ckpt: str, epoch: int, use_bloom: bool = True
-) -> tuple[int, int]:
-    """Process epoch `epoch` (state dir `epoch`) → commit dir `epoch+1`.
-    Returns (frontier size, URLs fetched); frontier 0 ⇒ crawl done.
+@dataclass
+class _SparkEpoch:
+    """An epoch's Spark-side inputs: lazy DataFrames, ``cache`` holding the
+    persisted ones until the commit releases them."""
 
-    A zero-budget epoch (frontier pending but every active host's bucket
-    below 1 token) still commits: politeness refills and virtual time
-    advances, matching the simulator's cadence exactly."""
-    # per-phase wall clock, committed into the epoch manifest ("phase_ms"):
-    # the scheduler's own lineage for finding non-scaling time (a phase whose
-    # wall is flat across core counts is serial overhead — Amdahl's bill)
-    phases: dict[str, float] = {}
-    _t = time.perf_counter()
+    frontier: DataFrame
+    politeness: DataFrame
+    host_counts: DataFrame
+    active: DataFrame
+    selected: DataFrame
+    remaining: DataFrame
+    taken: DataFrame
+    cache: list
 
-    def _mark(name: str) -> None:
-        nonlocal _t
-        now = time.perf_counter()
-        phases[name] = round((now - _t) * 1000.0, 1)
-        _t = now
+    def unpersist(self) -> None:
+        for df in self.cache:
+            df.unpersist()
 
-    # explicit schemas: spark.read.parquet without one EAGERLY lists the
-    # dir and reads a footer for inference (~50-60 ms of py4j/JVM latency
-    # per table per epoch — the bulk of the round-6 plan phase); the
-    # schemas are ours and fixed. The robots read moved into the one branch
-    # that uses it (distributed admission).
+
+def _spark_epoch(
+    spark: SparkSession,
+    spec: SiteSpec,
+    ckpt: str,
+    epoch: int,
+    stats: tuple[int, int, int] | None,
+) -> tuple[tuple[int, int, int], _SparkEpoch]:
+    """Build epoch `epoch`'s Spark-side inputs — frontier, politeness,
+    budgets, host_counts and the selected/remaining/taken split — for the
+    distributed path, or lazily for a driver-fetched epoch whose admission
+    outgrows the driver gates. ``stats`` None (no carried host_counts, or
+    more hosts than the local-read cap) runs the plan aggregate here.
+    Returns the (n_frontier, constrained, n_selected) stats with the
+    inputs."""
+    # explicit schemas: a schema-less spark.read.parquet eagerly lists the
+    # dir and reads a footer to infer one; the schemas are ours and fixed
     frontier = (
         spark.read.schema(_FRONTIER_SCHEMA)
         .parquet(ck.table_path(ckpt, epoch, "frontier"))
@@ -983,7 +994,6 @@ def run_epoch(
     politeness = spark.read.schema("host string, tokens double").parquet(
         ck.table_path(ckpt, epoch, "politeness")
     )
-    out_epoch = epoch + 1
     # a frontier host missing from the politeness table (discovered this
     # run) starts with a fresh bucket — floor(burst), exactly what
     # init_state grants; without the coalesce a null budget made the
@@ -1008,20 +1018,12 @@ def run_epoch(
     # tests/test_host_counts_carry.py pins carried == recomputed on every
     # committed epoch.
     host_counts = _read_host_counts(spark, ckpt, epoch)
-    stats = None
     if host_counts is None:
         host_counts = frontier.groupBy("host").agg(
             F.count(F.lit(1)).alias("n_pending")
         )
-    else:
-        # carried counts exist on disk: small host sets compute the three
-        # plan scalars driver-side from the parquet (no Spark job at all
-        # in the plan phase); large ones fall through to the aggregate
-        stats = _pending_stats_local(ckpt, epoch, default_budget)
     host_counts = host_counts.persist()
-    # small host/politeness tables read driver-side ⇒ the commit fast path
-    # below may also run driver-side (same bounded-local gate)
-    stats_local = stats is not None
+    cache = [frontier, host_counts]
     if stats is None:
         pending_stats = (
             host_counts.join(F.broadcast(budgets), "host", "left")
@@ -1044,19 +1046,10 @@ def run_epoch(
             int(pending_stats["constrained"] or 0),
             int(pending_stats["n_selected"] or 0),
         )
-    n_frontier, constrained, stats_n_selected = stats
-    _mark("plan")
-    if n_frontier == 0:
-        host_counts.unpersist()
-        frontier.unpersist()
-        return 0, 0
-    active = host_counts.select("host")
 
-    epoch_cache = [host_counts]
-    if constrained == 0:
+    if stats[1] == 0:
         selected = frontier.select(*FRONTIER_COLS)
         remaining = frontier.select(*FRONTIER_COLS).limit(0)
-        n_selected = n_frontier
         taken = host_counts.withColumnRenamed("n_pending", "n_taken")
     else:
         # Skew-safe per-host top-budget (Zipf host distributions are the
@@ -1079,23 +1072,21 @@ def run_epoch(
             .withColumn("_prn", F.row_number().over(wpre))
             .persist()
         )
-        epoch_cache.append(pre)
         survivors = pre.filter(F.col("_prn") <= F.col("budget")).drop(
             "_salt", "_prn"
         )
         dropped = pre.filter(F.col("_prn") > F.col("budget")).select(*FRONTIER_COLS)
         wsel = W.partitionBy("host").orderBy(*SELECT_ORDER)
         ranked = survivors.withColumn("rn", F.row_number().over(wsel)).persist()
-        epoch_cache.append(ranked)
+        cache += [pre, ranked]
         selected = ranked.filter(F.col("rn") <= F.col("budget")).select(*FRONTIER_COLS)
         remaining = dropped.unionByName(
             ranked.filter(F.col("rn") > F.col("budget")).select(*FRONTIER_COLS)
         )
-        # both derived from |hosts|-row metadata, not from the selected rows:
+        # derived from |hosts|-row metadata, not from the selected rows:
         # per-host take is exactly min(pending, budget) (proved bit-identical
         # to the window output by test_crawl_skew/test_crawl_equivalence), so
-        # no count job and no groupBy shuffle over the selected set
-        n_selected = stats_n_selected
+        # no groupBy shuffle over the selected set
         taken = (
             host_counts.join(F.broadcast(budgets), "host", "left")
             .withColumn("budget", F.coalesce("budget", F.lit(default_budget)))
@@ -1103,13 +1094,81 @@ def run_epoch(
                 "host", F.least("n_pending", "budget").alias("n_taken")
             )
         )
+    return stats, _SparkEpoch(
+        frontier, politeness, host_counts, host_counts.select("host"),
+        selected, remaining, taken, cache,
+    )
+
+
+def run_epoch(
+    spark: SparkSession, spec: SiteSpec, ckpt: str, epoch: int, use_bloom: bool = True
+) -> tuple[int, int]:
+    """Process epoch `epoch` (state dir `epoch`) → commit dir `epoch+1`.
+    Returns (frontier size, URLs fetched); frontier 0 ⇒ crawl done.
+
+    The epoch is planned from parquet footers first (`_pending_stats_local`).
+    A small unconstrained epoch that fits one fetch task is a driver epoch:
+    this process fetches, admits and commits it and builds no DataFrame.
+    Every other epoch builds its Spark-side inputs (`_spark_epoch`); the
+    manifest's ``path`` records which ran ("driver" | "spark").
+
+    A zero-budget epoch (frontier pending but every active host's bucket
+    below 1 token) still commits: politeness refills and virtual time
+    advances, matching the simulator's cadence exactly."""
+    # per-phase wall clock, committed into the epoch manifest ("phase_ms"):
+    # the scheduler's own lineage for finding non-scaling time (a phase whose
+    # wall is flat across core counts is serial overhead — Amdahl's bill)
+    phases: dict[str, float] = {}
+    _t = time.perf_counter()
+
+    def _mark(name: str) -> None:
+        nonlocal _t
+        now = time.perf_counter()
+        phases[name] = round((now - _t) * 1000.0, 1)
+        _t = now
+
+    out_epoch = epoch + 1
+    # small host sets give the three plan scalars from the carried
+    # host_counts/politeness parquet alone (no Spark job, no DataFrame);
+    # large ones run the aggregate in _spark_epoch
+    local = _pending_stats_local(ckpt, epoch, int(spec.burst))
+    sp = None  # the Spark-side inputs, built only on a path that reads them
+    if local is None:
+        stats, sp = _spark_epoch(spark, spec, ckpt, epoch, None)
+    else:
+        stats, hc, pol = local
+    n_frontier, constrained, n_selected = stats
+    _mark("plan")
+    if n_frontier == 0:
+        if sp is not None:
+            sp.unpersist()
+        return 0, 0
+    # an unconstrained epoch with locally read counts commits its state
+    # driver-side (remaining is empty, taken == pending); if it also fits
+    # one fetch task (below) the driver process fetches and admits it too,
+    # without any DataFrame
+    local_commit = local is not None and constrained == 0
+    in_driver = local_commit and n_selected <= _MIN_URLS_PER_FETCH_TASK
+    if sp is None and not in_driver:
+        _, sp = _spark_epoch(spark, spec, ckpt, epoch, stats)
+    path = "driver" if sp is None else "spark"
     _mark("select")
+
+    def _commit(**lineage) -> tuple[int, int]:
+        ck.commit_epoch(
+            ckpt, out_epoch, {"processed_epoch": epoch, **lineage, "phase_ms": phases}
+        )
+        if sp is not None:
+            sp.unpersist()
+        return n_frontier, lineage["urls_fetched"]
+
     if n_selected == 0:
         # virtual-time tick: refill buckets, carry frontier unchanged
-        ck.write_table(frontier.select(*FRONTIER_COLS), ckpt, out_epoch, "frontier")
-        ck.write_table(host_counts, ckpt, out_epoch, "host_counts")
+        # (constrained, so a Spark epoch)
+        ck.write_table(sp.frontier.select(*FRONTIER_COLS), ckpt, out_epoch, "frontier")
+        ck.write_table(sp.host_counts, ckpt, out_epoch, "host_counts")
         ck.write_table(
-            _advance_politeness(spec, politeness, active, None),
+            _advance_politeness(spec, sp.politeness, sp.active, None),
             ckpt,
             out_epoch,
             "politeness",
@@ -1122,51 +1181,37 @@ def run_epoch(
             flt.save(os.path.join(ck.epoch_dir(ckpt, out_epoch), "bloom.npz"))
         filter_load = _seen_filter_load(flt)  # inside the timed phase
         _mark("tick_commit")
-        ck.commit_epoch(
-            ckpt,
-            out_epoch,
-            {
-                "processed_epoch": epoch,
-                "urls_fetched": 0,
-                "urls_admitted": 0,
-                "seen_filter_load": filter_load,
-                "phase_ms": phases,
-            },
+        return _commit(
+            urls_fetched=0, urls_admitted=0, path=path, seen_filter_load=filter_load,
         )
-        for df in epoch_cache:
-            df.unpersist()
-        frontier.unpersist()
-        return n_frontier, 0
 
     # ---- fetch (payloads stay partition-local; written exactly once before
     # any shuffle — partitionBy(row_type) lets every downstream reader prune
     # the heavy payload files away; parquet compression off because image
     # payloads are already entropy-dense)
     fetch_out_path = ck.table_path(ckpt, out_epoch, "fetch_out")
-    # fetch tasks are sized by fetch *cost*, not by input bytes: the
-    # frontier rows are ~100 B each, so a byte-based scan split would run a
-    # million-URL fetch on two cores. Round-robin to 2× task slots, but
-    # give no task fewer than _MIN_URLS_PER_FETCH_TASK URLs.
-    fetch_par = min(
-        spark.sparkContext.defaultParallelism * 2,
-        max(1, -(-n_selected // _MIN_URLS_PER_FETCH_TASK)),
-    )
-    if stats_local and constrained == 0 and fetch_par == 1:
-        # a one-task epoch over a small frontier: the driver process runs
-        # the task itself and saves the Python task start-up and the job
-        # (~0.2-0.3 s, more than the fetch work it would carry); the link
-        # count is exact, so no accumulator
+    if in_driver:
+        # the one task runs in the driver process: no Python task start-up
+        # and no job (~0.2-0.3 s, more than the fetch work it would carry);
+        # the link count is exact, so no accumulator
         fetch_tasks = 0
         n_links = _fetch_in_driver(spec, ckpt, epoch, out_epoch, n_selected)
     else:
-        fetch_tasks = fetch_par
+        # fetch tasks are sized by fetch *cost*, not by input bytes: the
+        # frontier rows are ~100 B each, so a byte-based scan split would
+        # run a million-URL fetch on two cores. Round-robin to 2× task
+        # slots, but give no task fewer than _MIN_URLS_PER_FETCH_TASK URLs.
+        fetch_tasks = min(
+            spark.sparkContext.defaultParallelism * 2,
+            max(1, -(-n_selected // _MIN_URLS_PER_FETCH_TASK)),
+        )
         # discovered-link count rides back on an accumulator instead of a
         # probe job over the metric rows (see make_fetcher: retries can only
         # inflate it, and the epoch only branches on == 0, so inflation is
         # benign)
         links_acc = spark.sparkContext.accumulator(0)
         (
-            selected.repartition(fetch_par)
+            sp.selected.repartition(fetch_tasks)
             .mapInArrow(
                 make_fetcher(spec, epoch, links_acc=links_acc),
                 schema=FETCH_OUT_SCHEMA,
@@ -1192,7 +1237,7 @@ def run_epoch(
     log_is_frontier = constrained == 0
     if not log_is_frontier:
         ck.write_table(
-            selected.withColumn("epoch", F.lit(epoch)), ckpt, out_epoch, "crawl_log"
+            sp.selected.withColumn("epoch", F.lit(epoch)), ckpt, out_epoch, "crawl_log"
         )
 
     _mark("links_probe")
@@ -1200,22 +1245,22 @@ def run_epoch(
     # whether anything was discovered lets pure-payload epochs (steady
     # state, drain) skip the entire admission machinery
     if n_links == 0:
-        if stats_local and constrained == 0:
-            # pure-payload fast-path epoch (steady state, drain): remaining
-            # is empty and taken == pending, so the three next-state tables
-            # are tiny and fully driver-computable — same writes, no jobs
+        if local_commit:
+            # pure-payload fast-path epoch (steady state, drain): the three
+            # next-state tables are tiny and fully driver-computable — same
+            # writes, no jobs
             _commit_small_epoch_state(
-                ckpt, epoch, out_epoch, spec, [], write_seen_new=False
+                ckpt, out_epoch, spec, [], hc, pol, write_seen_new=False
             )
         else:
             _write_tables_concurrently(
                 ckpt,
                 out_epoch,
                 [
-                    (remaining, "frontier"),
-                    (_next_host_counts(host_counts, taken, None), "host_counts"),
+                    (sp.remaining, "frontier"),
+                    (_next_host_counts(sp.host_counts, sp.taken, None), "host_counts"),
                     (
-                        _advance_politeness(spec, politeness, active, taken),
+                        _advance_politeness(spec, sp.politeness, sp.active, sp.taken),
                         "politeness",
                     ),
                 ],
@@ -1229,23 +1274,11 @@ def run_epoch(
             flt.save(os.path.join(ck.epoch_dir(ckpt, out_epoch), "bloom.npz"))
         filter_load = _seen_filter_load(flt)  # inside the timed phase
         _mark("bloom")
-        ck.commit_epoch(
-            ckpt,
-            out_epoch,
-            {
-                "processed_epoch": epoch,
-                "urls_fetched": n_selected,
-                "urls_admitted": 0,
-                "crawl_log_from_frontier": log_is_frontier,
-                "fetch_tasks": fetch_tasks,
-                "seen_filter_load": filter_load,
-                "phase_ms": phases,
-            },
+        return _commit(
+            urls_fetched=n_selected, urls_admitted=0,
+            crawl_log_from_frontier=log_is_frontier, fetch_tasks=fetch_tasks, path=path,
+            seen_filter_load=filter_load,
         )
-        for df in epoch_cache:
-            df.unpersist()
-        frontier.unpersist()
-        return n_frontier, n_selected
 
     # small-epoch driver commit (round 6): when the carried counts were
     # already read locally, selection was unconstrained (remaining empty,
@@ -1258,15 +1291,14 @@ def run_epoch(
     # _commit_small_epoch_state); large epochs take the distributed path
     # below unchanged.
     if (
-        stats_local
-        and constrained == 0
+        local_commit
         and n_links <= _DRIVER_COMMIT_MAX_ROWS
         and _seen_rows_small(ckpt, epoch, _DRIVER_ADD_MAX_ROWS)
     ):
         adm_rows = _admit_links_driver(ckpt, epoch, out_epoch, fetch_out_path)
         n_admitted = len(adm_rows)
         _mark("admission")
-        _commit_small_epoch_state(ckpt, epoch, out_epoch, spec, adm_rows)
+        _commit_small_epoch_state(ckpt, out_epoch, spec, adm_rows, hc, pol)
         _mark("state_writes")
         bf = None
         if use_bloom:
@@ -1279,10 +1311,11 @@ def run_epoch(
                     and len(bf) + n_admitted > _CUCKOO_GROW_LOAD * bf.capacity
                 ):
                     # seen_new for this epoch is already written above, so
-                    # the rebuild covers the batch too
+                    # the rebuild covers the batch too; it is a Spark job
                     bf = _grow_cuckoo(
                         spark, ckpt, out_epoch, bf, len(bf) + n_admitted
                     )
+                    path = "spark"
                 else:
                     bf.add_many(
                         np.fromiter(
@@ -1294,27 +1327,19 @@ def run_epoch(
             bf.save(os.path.join(ck.epoch_dir(ckpt, out_epoch), "bloom.npz"))
         filter_load = _seen_filter_load(bf)  # inside the timed phase
         _mark("bloom")
-        ck.commit_epoch(
-            ckpt,
-            out_epoch,
-            {
-                "processed_epoch": epoch,
-                "urls_fetched": n_selected,
-                "urls_admitted": n_admitted,
-                "crawl_log_from_frontier": log_is_frontier,
-                "fetch_tasks": fetch_tasks,
-                "seen_filter_load": filter_load,
-                "phase_ms": phases,
-            },
+        return _commit(
+            urls_fetched=n_selected, urls_admitted=n_admitted,
+            crawl_log_from_frontier=log_is_frontier, fetch_tasks=fetch_tasks, path=path,
+            seen_filter_load=filter_load,
         )
-        for df in epoch_cache:
-            df.unpersist()
-        frontier.unpersist()
-        return n_frontier, n_selected
 
     # ---- admission: route filter → robots → keep-first → bloom+anti-join
     # (explicit schema: skips inference listing; pure-payload epochs above
-    # never open the directory at all)
+    # never open the directory at all). A driver-fetched epoch whose links
+    # or seen view outgrow the driver gates builds its Spark inputs here.
+    if sp is None:
+        _, sp = _spark_epoch(spark, spec, ckpt, epoch, stats)
+        path = "spark"
     fetch_out = spark.read.schema(FETCH_OUT_SCHEMA).parquet(fetch_out_path)
     links = (
         fetch_out.filter(F.col("row_type") == "link")
@@ -1351,7 +1376,7 @@ def run_epoch(
     if use_bloom:
         bf = _load_seen_filter(os.path.join(ck.epoch_dir(ckpt, epoch), "bloom.npz"))
         cand = cand.withColumn("_maybe", _seen_filter_udf(bf)("url_hash")).persist()
-        epoch_cache.append(cand)
+        sp.cache.append(cand)
         definite_new = cand.filter(~F.col("_maybe")).drop("_maybe")
         suspect = cand.filter(F.col("_maybe")).drop("_maybe")
         admitted = definite_new.unionByName(suspect.join(seen, "url", "left_anti"))
@@ -1360,6 +1385,7 @@ def run_epoch(
         admitted = cand.join(seen, "url", "left_anti")
 
     admitted = admitted.persist()
+    sp.cache.append(admitted)
     _mark("admission")
 
     # ---- commit next state. `admitted` is persisted but NOT
@@ -1376,16 +1402,19 @@ def run_epoch(
         "seen_new",
     )
     n_admitted = ck.table_num_rows(ckpt, out_epoch, "seen_new")
-    new_frontier = remaining.unionByName(admitted.select(*FRONTIER_COLS)).repartition(
-        "host"
-    )
+    new_frontier = sp.remaining.unionByName(
+        admitted.select(*FRONTIER_COLS)
+    ).repartition("host")
     _write_tables_concurrently(
         ckpt,
         out_epoch,
         [
             (new_frontier, "frontier"),
-            (_next_host_counts(host_counts, taken, admitted), "host_counts"),
-            (_advance_politeness(spec, politeness, active, taken), "politeness"),
+            (_next_host_counts(sp.host_counts, sp.taken, admitted), "host_counts"),
+            (
+                _advance_politeness(spec, sp.politeness, sp.active, sp.taken),
+                "politeness",
+            ),
         ],
     )
     _mark("state_writes")
@@ -1407,25 +1436,11 @@ def run_epoch(
         bf.save(os.path.join(ck.epoch_dir(ckpt, out_epoch), "bloom.npz"))
     filter_load = _seen_filter_load(bf)  # inside the timed phase
     _mark("bloom")
-
-    ck.commit_epoch(
-        ckpt,
-        out_epoch,
-        {
-            "processed_epoch": epoch,
-            "urls_fetched": n_selected,
-            "urls_admitted": n_admitted,
-            "crawl_log_from_frontier": log_is_frontier,
-            "fetch_tasks": fetch_tasks,
-            "seen_filter_load": filter_load,
-            "phase_ms": phases,
-        },
+    return _commit(
+        urls_fetched=n_selected, urls_admitted=n_admitted,
+        crawl_log_from_frontier=log_is_frontier, fetch_tasks=fetch_tasks, path=path,
+        seen_filter_load=filter_load,
     )
-    for df in epoch_cache:
-        df.unpersist()
-    frontier.unpersist()
-    admitted.unpersist()
-    return n_frontier, n_selected
 
 
 def init_steady_frontier(

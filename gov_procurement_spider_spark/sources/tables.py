@@ -33,17 +33,20 @@ TABLES = (
 # latency per call (measured, round 6), paid again on every fresh DataFrame
 # build. The first read of a path in a process still infers from the real
 # footer; later builds pass the identical schema explicitly — same plan,
-# same pushdown, no repeated footer job. Keyed by absolute path, so
-# different sf_dirs never share an entry.
-_SCHEMA_MEMO: dict[str, StructType] = {}
+# same pushdown, no repeated footer job. Keyed by absolute path, mtime and
+# size, so different sf_dirs never share an entry and a file rewritten in
+# place is inferred afresh instead of read with its old schema.
+_SCHEMA_MEMO: dict[tuple[str, int, int], StructType] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
-    schema = _SCHEMA_MEMO.get(path)
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    schema = _SCHEMA_MEMO.get(key)
     if schema is None:
         df = spark.read.parquet(path)
-        _SCHEMA_MEMO[path] = df.schema
+        _SCHEMA_MEMO[key] = df.schema
         return df
     return spark.read.schema(schema).parquet(path)
 

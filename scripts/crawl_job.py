@@ -15,8 +15,9 @@ the job lands on a real multi-executor cluster. Two modes:
   the same job in-process across core counts).
 
 Prints ONE JSON line with the run's lineage (urls, epochs, wall, phase_ms
-of the last epoch, and the fetch_tasks of every fetching epoch: 0 = fetched
-in the driver process) on success.
+of the last epoch, the fetch_tasks of every fetching epoch: 0 = fetched in
+the driver process, and the path of every crawl epoch: "driver" = built no
+DataFrame, else "spark") on success.
 """
 
 from __future__ import annotations
@@ -132,6 +133,7 @@ def main() -> None:
         ck.read_manifest(args.ckpt, e) for e in ck.committed_epochs(args.ckpt)
     ]
     out["fetch_tasks"] = [m["fetch_tasks"] for m in manifests if "fetch_tasks" in m]
+    out["path"] = [m["path"] for m in manifests if "path" in m]
     print(json.dumps(out))
     spark.stop()
 

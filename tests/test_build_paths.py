@@ -34,6 +34,21 @@ def test_memo_keys_are_per_path(spark, sf_small, sf_dir):
     assert len(tables._SCHEMA_MEMO) == 2
 
 
+def test_memo_sees_rewritten_file(spark, tmp_path):
+    """A table file rewritten in the same process with a different schema
+    is read with the new schema, not the memoized one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+    assert tables.load_table(spark, str(tmp_path), "events").columns == ["a"]
+    pq.write_table(pa.table({"x": ["p", "q"], "y": [1.5, 2.5]}), path)
+    df = tables.load_table(spark, str(tmp_path), "events")
+    assert df.columns == ["x", "y"]
+    assert sorted(tuple(r) for r in df.collect()) == [("p", 1.5), ("q", 2.5)]
+
+
 # strings exercising every delimiter plus trim/empty-part edge cases the
 # driver corpus never hits ('\n' and '|' never align there)
 _SPLIT_CASES = [

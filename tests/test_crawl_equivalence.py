@@ -6,6 +6,7 @@ results.
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 import numpy as np
@@ -14,7 +15,13 @@ from pyspark.sql import functions as F
 
 from gov_procurement_spider_spark.functions import images
 from gov_procurement_spider_spark.plans import crawl as crawl_plan
-from gov_procurement_spider_spark.plans.crawl import ORDER_KEY, run_crawl
+from gov_procurement_spider_spark.plans.crawl import (
+    ORDER_KEY,
+    CrawlResult,
+    init_state,
+    run_crawl,
+    run_epoch,
+)
 from gov_procurement_spider_spark.refsim import simulate
 from gov_procurement_spider_spark.sources.site_model import SiteSpec
 from gov_procurement_spider_spark.streaming import checkpoint as ck
@@ -164,10 +171,17 @@ def test_accessors_before_any_fetch(spark, crawl):
         assert empty.count() == 0, name
 
 
-def _fetch_tasks(ckpt: str) -> list:
-    """The manifest's fetch path per fetching epoch: 0 = driver process."""
-    mans = [ck.read_manifest(ckpt, e) for e in ck.committed_epochs(ckpt)]
-    return [m["fetch_tasks"] for m in mans if m.get("urls_fetched")]
+def _fetch_lineage(ckpt: str) -> list:
+    """(fetch_tasks, path, discovered links?) per fetching epoch, from the
+    manifests: fetch_tasks 0 = fetched in the driver process, path
+    "driver" = the epoch built no DataFrame."""
+    out = []
+    for e in ck.committed_epochs(ckpt):
+        m = ck.read_manifest(ckpt, e)
+        if m.get("urls_fetched"):
+            links = ck.table_path(ckpt, e, "fetch_out/row_type=link")
+            out.append((m["fetch_tasks"], m["path"], os.path.isdir(links)))
+    return out
 
 
 def _outputs(res) -> dict:
@@ -190,36 +204,70 @@ def _outputs(res) -> dict:
     }
 
 
+# open politeness, so every epoch selects the whole frontier; every epoch
+# fetches ≥ 3 URLs: a one-URL epoch is one task at any floor
+GATE_SPEC = SiteSpec(
+    n_seeds=6, n_hosts=3, detail_space=60, max_list_pages=4,
+    rate_per_sec=10_000.0, burst=20_000.0, fail_permille=200,
+)
+
+
 def test_fetch_gate_both_sides_identical(spark, monkeypatch):
     """The one-task fetch gate, run on both sides: at the default floor
-    every epoch of this small open-politeness crawl is one task and fetches
-    in the driver process; with the floor at one URL per task every epoch
-    runs the Spark fetch job. Crawl order, seen and failed sets, per-URL
-    payloads and the summed fetch metrics must be identical. A third run
-    reads the driver-written fetch output with the distributed admission
-    (driver-commit gate at 0), the path a small epoch over a large seen set
-    takes."""
-    # every epoch fetches ≥ 3 URLs: a one-URL epoch is one task at any floor
-    spec = SiteSpec(
-        n_seeds=6, n_hosts=3, detail_space=60, max_list_pages=4,
-        rate_per_sec=10_000.0, burst=20_000.0, fail_permille=200,
-    )
+    every epoch of this small open-politeness crawl is one task and runs
+    in the driver process, building no DataFrame; with the floor at one URL
+    per task every epoch runs the Spark fetch job. Crawl order, seen and
+    failed sets, per-URL payloads and the summed fetch metrics must be
+    identical. A third run reads the driver-written fetch output with the
+    distributed admission (driver-commit gate at 0), the path a small
+    epoch over a large seen set takes: its link-discovering epochs build
+    their Spark inputs after the driver fetch."""
+    spec = GATE_SPEC
 
     def crawl(tag: str) -> tuple[dict, list]:
         ckpt = tempfile.mkdtemp(prefix=f"crawl_gate_{tag}_")
-        return _outputs(run_crawl(spark, spec, ckpt)), _fetch_tasks(ckpt)
+        return _outputs(run_crawl(spark, spec, ckpt)), _fetch_lineage(ckpt)
 
-    driver, driver_tasks = crawl("driver")
+    driver, driver_lin = crawl("driver")
     with monkeypatch.context() as m:
         m.setattr(crawl_plan, "_DRIVER_COMMIT_MAX_ROWS", 0)
-        spark_admit, spark_admit_tasks = crawl("spark_admit")
+        spark_admit, spark_admit_lin = crawl("spark_admit")
     monkeypatch.setattr(crawl_plan, "_MIN_URLS_PER_FETCH_TASK", 1)
-    distributed, spark_tasks = crawl("spark")
+    distributed, spark_lin = crawl("spark")
 
-    assert driver_tasks and set(driver_tasks) == {0}
-    assert spark_admit_tasks == driver_tasks
-    assert len(spark_tasks) == len(driver_tasks) and min(spark_tasks) > 0
+    assert driver_lin
+    assert {(t, p) for t, p, _ in driver_lin} == {(0, "driver")}
+    assert [t for t, _, _ in spark_admit_lin] == [t for t, _, _ in driver_lin]
+    assert any(links for _, _, links in spark_admit_lin)
+    assert all(p == "spark" for _, p, links in spark_admit_lin if links)
+    assert len(spark_lin) == len(driver_lin)
+    assert min(t for t, _, _ in spark_lin) > 0
+    assert {p for _, p, _ in spark_lin} == {"spark"}
     assert driver["failed"], "failure injection produced no failures"
     assert driver == distributed
     assert driver == spark_admit
     assert driver["order"] == [tuple(o) for o in simulate(spec).crawl_order]
+
+
+class _NoSpark:
+    """A session stand-in: every attribute access raises."""
+
+    def __getattribute__(self, name):
+        raise AssertionError(f"SparkSession touched: .{name}")
+
+
+def test_small_epochs_never_touch_spark(spark):
+    """Footer-first planning: init and every epoch of a small
+    open-politeness crawl run in the driver process without touching the
+    SparkSession, and the checkpoint they leave reproduces the reference
+    crawl order and seen set."""
+    ckpt = tempfile.mkdtemp(prefix="crawl_nospark_")
+    init_state(_NoSpark(), GATE_SPEC, ckpt)
+    epoch = 0
+    while run_epoch(_NoSpark(), GATE_SPEC, ckpt, epoch)[0]:
+        epoch += 1
+    res = CrawlResult(ckpt=ckpt, epochs=epoch, spark=spark)
+    sim = simulate(GATE_SPEC)
+    engine = [tuple(r) for r in res.crawl_order().select(*ORDER_COLS).collect()]
+    assert engine == [tuple(o) for o in sim.crawl_order]
+    assert {r.url for r in res.seen().collect()} == sim.url_seen
